@@ -7,6 +7,8 @@ same random input. Example counts stay small: every example is a real
 Spark job.
 """
 
+import datetime
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -1030,3 +1032,73 @@ def test_leakage_safe_split_never_straddles_any_component(
         assert len({side[m] for m in members}) == 1, (
             f"component {sorted(members)} straddles the split"
         )
+
+
+def _nullable(strategy):
+    return st.one_of(st.none(), strategy)
+
+
+# (column DDL, strategy) per key type the driver-side state routing hashes
+HASH_COLUMNS = [
+    ("b boolean", st.booleans()),
+    ("i8 tinyint", st.integers(-(2**7), 2**7 - 1)),
+    ("i16 smallint", st.integers(-(2**15), 2**15 - 1)),
+    ("i32 int", st.integers(-(2**31), 2**31 - 1)),
+    ("i64 bigint", st.integers(-(2**63), 2**63 - 1)),
+    ("f float", st.one_of(st.sampled_from([0.0, -0.0]), st.floats(width=32))),
+    ("d double", st.one_of(st.sampled_from([0.0, -0.0]), st.floats())),
+    ("s string", st.one_of(st.sampled_from(["", "é", "日本語"]), st.text(max_size=9))),
+    ("bin binary", st.binary(max_size=9)),
+    ("day date", st.dates()),
+    ("ts timestamp", st.datetimes(datetime.datetime(1900, 1, 2), datetime.datetime(2200, 1, 1))),
+    ("ntz timestamp_ntz", st.datetimes()),
+    ("iv interval day to second", st.timedeltas(
+        -datetime.timedelta(days=10**6), datetime.timedelta(days=10**6))),
+    ("dec decimal(12,2)", st.decimals(-(10**9), 10**9, places=2,
+                                      allow_nan=False, allow_infinity=False)),
+    ("wide decimal(30,4)", st.decimals(-(10**25), 10**25, places=4,
+                                       allow_nan=False, allow_infinity=False)),
+    ("arr array<int>", st.lists(_nullable(st.integers(-(2**31), 2**31 - 1)), max_size=4)),
+    # Spark hashes map entries in their stored order, which a Python dict's
+    # trip through createDataFrame does not keep; one entry has one order
+    ("m map<string,bigint>", st.dictionaries(
+        st.text(max_size=3), _nullable(st.integers(-(2**63), 2**63 - 1)), max_size=1)),
+    # a windowed count's state key: (window struct, key)
+    ("window struct<start: timestamp, end: timestamp>", st.tuples(
+        st.datetimes(datetime.datetime(2000, 1, 1), datetime.datetime(2100, 1, 1)),
+        st.datetimes(datetime.datetime(2000, 1, 1), datetime.datetime(2100, 1, 1)),
+    )),
+    ("key string", st.text(max_size=4)),
+]
+
+
+@given(rows=st.lists(
+    st.tuples(*[_nullable(s) for _, s in HASH_COLUMNS]), min_size=1, max_size=6,
+))
+@settings(**SETTINGS)
+def test_driver_murmur3_matches_spark_hash(spark, rows):
+    """The Python Murmur3 that routes state lookups == Spark's F.hash, per
+    column type and chained over a whole row (nulls skipped), for negative
+    numbers, -0.0 and NaN, empty and multibyte strings, wide decimals,
+    arrays, maps and a windowed count's (window, key) struct key."""
+    from kafka_streams_demo_spark.streaming.interactive import spark_hash
+
+    df = spark.createDataFrame(rows, ", ".join(c for c, _ in HASH_COLUMNS))
+    types = [f.dataType for f in df.schema.fields]
+    names = df.columns
+    window_key = [names.index("window"), names.index("key")]
+    spark.conf.set("spark.sql.legacy.allowHashOnMapType", "true")
+    try:
+        got = df.select(
+            *[F.hash(c) for c in names],
+            F.hash(*[names[i] for i in window_key]),
+            F.hash(*names),
+        ).collect()
+    finally:
+        spark.conf.unset("spark.sql.legacy.allowHashOnMapType")
+    for row, spark_row in zip(rows, got):
+        want = [spark_hash([v], [t]) for v, t in zip(row, types)]
+        want.append(spark_hash([row[i] for i in window_key],
+                               [types[i] for i in window_key]))
+        want.append(spark_hash(list(row), types))
+        assert list(spark_row) == want, row

@@ -717,6 +717,31 @@ def test_interactive_point_lookup_partition_math_and_plan(spark, tmp_path):
     for r in state_store(spark, ck).select("key", "partition_id").collect():
         assert state_partition(spark, {"key": r["key"]}, n) == r["partition_id"], r
 
+    # ... and for int, long and composite (string, long) keys, hashed with
+    # the store's own key schema
+    for name, key_exprs in [
+        ("int", ["CAST(id % 29 - 14 AS INT) AS k"]),
+        ("long", ["(id % 31 - 15) * 4294967311 AS k"]),
+        ("composite", ["concat('s', id % 7, 'é') AS s", "id % 5 - 2 AS l"]),
+    ]:
+        kcols = [e.rsplit(" AS ", 1)[1] for e in key_exprs]
+        kck = str(tmp_path / f"iq_pp_{name}_ck")
+        kdir = tmp_path / f"iq_pp_{name}_src"
+        kdf = spark.range(200).selectExpr(*key_exprs, "id AS value")
+        kdf.write.parquet(str(kdir))
+        ks = spark.readStream.schema(kdf.schema).parquet(str(kdir))
+        kq = ks.groupBy(*kcols).count().writeStream.format("noop") \
+            .outputMode("update").option("checkpointLocation", kck) \
+            .trigger(availableNow=True).start()
+        kq.awaitTermination(120)
+        key_schema = state_store(spark, kck, flatten=False).schema["key"].dataType
+        rows = state_store(spark, kck).select(*kcols, "partition_id").collect()
+        assert len(rows) > 1, name
+        for r in rows:
+            key = {c: r[c] for c in kcols}
+            assert state_partition(spark, key, n, key_schema=key_schema) \
+                == r["partition_id"], (name, r)
+
     # (b) lookup result + plan shape
     got = state_get(spark, ck, {"key": "k7"}).collect()
     assert len(got) == 1 and got[0]["count"] == 200 // 23 + (1 if 7 < 200 % 23 else 0)
@@ -760,10 +785,6 @@ def test_interactive_point_lookup_int_key_types(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="key fields"):
         state_get(spark, ck, {"wrong": 1}).collect()
-    # num_partitions passthrough skips the metadata read, same result
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    got = state_get(spark, ck, {"k": 7}, num_partitions=n).collect()
-    assert len(got) == 1
 
 
 def test_interactive_query_reads_processor_state(spark, tmp_path):
@@ -2389,6 +2410,7 @@ def test_state_get_point_single_partition_read(spark, tmp_path):
         latest_partition_snapshot,
         state_get,
         state_get_point,
+        state_metadata,
         state_partition,
     )
 
@@ -2418,7 +2440,8 @@ def test_state_get_point_single_partition_read(spark, tmp_path):
         q.awaitTermination(180)
 
         # maintenance is async: poll for a snapshot in k3's partition
-        p3 = state_partition(spark, {"key": "k3"}, 32)
+        n = state_metadata(spark, ck).first()["numPartitions"]
+        p3 = state_partition(spark, {"key": "k3"}, n)
         deadline = _time.monotonic() + 60
         while (
             latest_partition_snapshot(ck, p3) is None
@@ -2471,6 +2494,7 @@ def test_state_get_point_snapshot_deterministic(spark, tmp_path):
         snapshot_eager,
         state_get,
         state_get_point,
+        state_metadata,
         state_partition,
     )
 
@@ -2496,8 +2520,9 @@ def test_state_get_point_snapshot_deterministic(spark, tmp_path):
         q.awaitTermination(180)
         # bounded event-wait (not a sleep): every key's partition must
         # produce a snapshot under the eager confs
+        n = state_metadata(spark, ck).first()["numPartitions"]
         for i in range(4):
-            p = state_partition(spark, {"key": f"k{i}"}, 32)
+            p = state_partition(spark, {"key": f"k{i}"}, n)
             assert await_partition_snapshot(ck, p, timeout_s=30) >= 1
 
     for i in range(4):
@@ -2509,6 +2534,85 @@ def test_state_get_point_snapshot_deterministic(spark, tmp_path):
             for r in state_get(spark, ck, {"key": f"k{i}"}).collect()
         ]
         assert got == want and got == [(f"k{i}", 15)]
+
+
+def _drive_count(spark, src, ck, rows):
+    """``rows`` (key, value) pairs through an availableNow keyed count into
+    checkpoint ``ck``."""
+    spark.createDataFrame(rows, "key string, value long").write \
+        .mode("overwrite").parquet(str(src))
+    stream = spark.readStream.schema("key string, value long").parquet(str(src))
+    q = stream.groupBy("key").count().writeStream.format("noop") \
+        .outputMode("update").option("checkpointLocation", ck) \
+        .trigger(availableNow=True).start()
+    q.awaitTermination(120)
+
+
+def test_state_get_point_warm_lookup_runs_no_job(spark, tmp_path):
+    """On a warm checkpoint state_get_point builds its lookup without a
+    Spark job: the store layout is cached and the partition is hashed on
+    the driver. The first call on a checkpoint fills the cache (and runs
+    the metadata job, which shows the job count is live)."""
+    from kafka_streams_demo_spark.streaming.interactive import state_get_point
+
+    ck = str(tmp_path / "warm_ck")
+    _drive_count(spark, tmp_path / "warm_src",
+                 ck, [(f"k{i % 6}", i) for i in range(60)])
+    sc = spark.sparkContext
+
+    def build(group, key):
+        sc.setJobGroup(group, "state_get_point build")
+        try:
+            df = state_get_point(spark, ck, key)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, cold_jobs = build("iq-cold", {"key": "k1"})
+    assert cold_jobs >= 1
+    second, warm_jobs = build("iq-warm", {"key": "k2"})
+    assert warm_jobs == 0, "the warm lookup launched a Spark job"
+    assert [(r["key"], r["count"]) for r in first.collect()] == [("k1", 10)]
+    assert [(r["key"], r["count"]) for r in second.collect()] == [("k2", 10)]
+
+
+def test_state_lookup_follows_a_recreated_checkpoint(spark, tmp_path):
+    """A checkpoint deleted and driven again at the same path with another
+    partition count gets a new query id, so the cached layout is dropped:
+    lookups route with the new count and read the new values."""
+    import shutil
+
+    from kafka_streams_demo_spark.streaming.interactive import (
+        state_get,
+        state_get_point,
+        state_partition,
+    )
+
+    ck = str(tmp_path / "recreate_ck")
+    keys = [f"k{i}" for i in range(12)]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        _drive_count(spark, tmp_path / "src3", ck,
+                     [(k, 0) for k in keys for _ in range(2)])
+        for k in keys:
+            assert [r["count"] for r in state_get_point(spark, ck, {"key": k}).collect()] == [2]
+
+        shutil.rmtree(ck)
+        spark.conf.set("spark.sql.shuffle.partitions", "5")
+        _drive_count(spark, tmp_path / "src5", ck,
+                     [(k, 0) for k in keys for _ in range(5)])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # the old count would misroute some of these keys
+    assert any(state_partition(spark, {"key": k}, 3)
+               != state_partition(spark, {"key": k}, 5) for k in keys)
+    for k in keys:
+        for lookup in (state_get_point, state_get):
+            rows = lookup(spark, ck, {"key": k}).collect()
+            assert [(r["count"], r["partition_id"]) for r in rows] == [
+                (5, state_partition(spark, {"key": k}, 5))
+            ], (lookup.__name__, k)
 
 
 def test_await_partition_snapshot_times_out_with_guidance(tmp_path):
